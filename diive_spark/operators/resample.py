@@ -83,6 +83,12 @@ def apply_mincount_gate(
     )
 
 
+def percentile_col(q: float, prefix: str = "p") -> str:
+    """Column name of the per-bin *q* percentile (0.5 -> ``p50``) — the
+    one spelling rollups, tier tables and sketch estimates share."""
+    return f"{prefix}{int(round(q * 100)):02d}"
+
+
 def _sd_from_partials(n: Column, s: Column, ss: Column) -> Column:
     """Sample SD (ddof=1, pandas default — diive/core/dfun/stats.py:87)
     from (count, sum, sum-of-squares) partials."""
@@ -187,7 +193,7 @@ def hist_percentile_estimate(
         cnt = F.element_at(F.col(hist_col), (idx0 + 1).cast("int"))
         frac = (t - cum_before.cast("double")) / cnt.cast("double")
         est = F.lit(float(lo)) + (idx0.cast("double") + frac) * F.lit(float(width))
-        name = f"{prefix}{int(round(q * 100)):02d}_est"
+        name = f"{percentile_col(q, prefix)}_est"
         out = out.withColumn(name, F.when(n > 0, est))
     return out.drop("_cum")
 
@@ -313,7 +319,7 @@ def bucket_rollup(
     )
     if percentiles:
         for i, p in enumerate(percentiles):
-            out = out.withColumn(f"p{int(round(p * 100)):02d}", F.col("_pcts")[i])
+            out = out.withColumn(percentile_col(p), F.col("_pcts")[i])
         out = out.drop("_pcts")
     return out
 

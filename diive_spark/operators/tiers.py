@@ -12,11 +12,17 @@ North-rule requirements covered here:
   :class:`TierBackend` interface (write/read/list/drop/exists) — the
   parquet default is :class:`ParquetDPOBackend`; an Iceberg catalog
   backend is a drop-in (the interface docstring maps each method to its
-  Iceberg operation).
+  Iceberg operation).  Backends only move bytes: the physical layout
+  (``TierStore.range_layout``) and the written row count are decided
+  once, in :meth:`TierStore._write_partitions`, the single tier-write
+  path.
 - **resumable from checkpoint with per-partition lineage and metrics
   tables**: every materialized partition records (tier, partition,
-  input fingerprint, row count, duration); a resumed run skips
-  partitions whose fingerprint is unchanged and recomputes the rest.
+  input fingerprint, the row count of the write that stored it,
+  duration); a resumed run skips partitions whose fingerprint is
+  unchanged and recomputes the rest.  One method
+  (:meth:`TierStore._materialize`) runs this contract for the rollup,
+  DDSketch and Count-Min cascades.
 - tier N+1 is composed from tier N partials (compose_rollup) — the raw
   series is scanned exactly once per cascade.
 
@@ -47,7 +53,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from ..conventions import KEY_COLS
 from ..functions.gorilla import gorilla_decode_values, gorilla_encode_values
 from ..session import fs_exists
-from .resample import apply_mincount_gate, bucket_rollup, compose_rollup
+from .resample import (apply_mincount_gate, bucket_rollup, compose_rollup,
+                       percentile_col)
 
 TIER_COLS = [
     "doc_id", "bin_start", "bin_end", "bin_label",
@@ -56,7 +63,8 @@ TIER_COLS = [
 
 # optional composable per-bin statistic columns (selected into tier
 # tables whenever the rollup produced them) — extend HERE when a new
-# mergeable family is added, both write paths consume this one tuple
+# mergeable family is added, the one tier-frame helper
+# (TierStore._tier_frame) consumes this tuple
 COMPOSABLE_COLS = ("hll", "hist", "open", "close", "open_pos", "close_pos")
 
 
@@ -100,11 +108,15 @@ class TierBackend:
     """Storage seam for :class:`TierStore` (VERDICT r3 item 7): every
     byte the store reads or writes goes through this interface, so an
     Iceberg catalog is a drop-in replacement for the parquet default.
+    Backends are pure I/O: they write a frame exactly as given — the
+    store has already applied its range layout and attached its row
+    count — and never sort, repartition or count.
     The contract per method, and its Iceberg mapping:
 
     - ``write_partitions(df, tier)``: idempotently replace exactly the
       ``partition_col`` partitions present in *df*, leaving all others
-      untouched.  Parquet: dynamic partition overwrite.  Iceberg:
+      untouched, keeping *df*'s partitioning and row order.  Parquet:
+      dynamic partition overwrite.  Iceberg:
       ``MERGE INTO``/``INSERT OVERWRITE`` on a table
       ``PARTITIONED BY (source, bucket(N, doc_id))`` — snapshot
       isolation also removes the read-then-overwrite staging
@@ -171,35 +183,23 @@ def _dir_parquet_stats(spark: SparkSession, path: str) -> tuple[int, int]:
 class ParquetDPOBackend(TierBackend):
     """Default backend: parquet + Spark dynamic partition overwrite
     (the sandbox has no Iceberg jars; module docstring documents the
-    equivalence).  ``range_layout`` adds a repartitionByRange + sort on
-    (partition_col, doc_id, bin_start) before each write so parquet
-    row-group min/max statistics are monotone — time-range and per-doc
-    scans prune at the row-group level (the north-rule's explicit
-    range partitioning)."""
+    equivalence).  Writes the frame as given, one file per input
+    partition per ``partition_col`` value: the row-group-pruning range
+    layout is :class:`TierStore`'s (``range_layout``), applied before
+    the frame gets here."""
 
     def __init__(self, spark: SparkSession, root: str,
-                 partition_col: str = "source",
-                 range_layout: bool = True):
+                 partition_col: str = "source"):
         self.spark = spark
         self.root = root
         self.partition_col = partition_col
-        self.range_layout = range_layout
 
     def location(self, tier: str) -> str:
         return os.path.join(self.root, tier)
 
     def write_partitions(self, df: DataFrame, tier: str) -> None:
-        out = df
-        if self.range_layout:
-            sort_cols = [
-                c for c in ("doc_id", "bin_start") if c in df.columns
-            ]
-            if sort_cols:
-                out = df.repartitionByRange(
-                    self.partition_col, *sort_cols
-                ).sortWithinPartitions(self.partition_col, *sort_cols)
         (
-            out.write.mode("overwrite")
+            df.write.mode("overwrite")
             # per-writer option, NOT ambient session config: a plain
             # SparkSession defaults to STATIC overwrite, which would
             # truncate untouched partitions on incremental merges
@@ -330,12 +330,10 @@ class SnapshotBackend(TierBackend):
     """
 
     def __init__(self, spark: SparkSession, root: str,
-                 partition_col: str = "source",
-                 range_layout: bool = True):
+                 partition_col: str = "source"):
         self.spark = spark
         self.root = root
         self.partition_col = partition_col
-        self.range_layout = range_layout
 
     # ----------------------------------------------------- fs helpers
     def _fs(self, path: str):
@@ -453,10 +451,14 @@ class SnapshotBackend(TierBackend):
         snaps = self.snapshots(tier)
         return max(s["id"] for s in snaps) if snaps else None
 
-    def _commit(self, tier: str, parts: dict[str, int],
-                parent: int | None) -> int:
+    def _next_snapshot_id(self, tier: str) -> int:
+        """One past the newest committed manifest (not the current
+        pointer: after a rollback newer snapshots still exist)."""
         snaps = self.snapshots(tier)
-        new_id = (max(s["id"] for s in snaps) + 1) if snaps else 1
+        return (max(s["id"] for s in snaps) + 1) if snaps else 1
+
+    def _commit(self, tier: str, parts: dict[str, int],
+                parent: int | None, new_id: int) -> None:
         manifest = {"id": new_id, "parent": parent, "ts": time.time(),
                     "parts": parts}
         self._write_text(
@@ -464,7 +466,6 @@ class SnapshotBackend(TierBackend):
             json.dumps(manifest))
         # the pointer flip IS the commit (Iceberg: atomic catalog swap)
         self._write_text_atomic(self._current_path(tier), str(new_id))
-        return new_id
 
     # ------------------------------------------------------ TierBackend
     def write_partitions(self, df: DataFrame, tier: str) -> None:
@@ -473,23 +474,13 @@ class SnapshotBackend(TierBackend):
                              "snapshot version directory")
         parent = self.current_snapshot_id(tier)
         base = self._snapshot(tier, parent)["parts"] if parent else {}
-        snaps = self.snapshots(tier)
-        new_id = (max(s["id"] for s in snaps) + 1) if snaps else 1
-        out = df
-        if self.range_layout:
-            sort_cols = [
-                c for c in ("doc_id", "bin_start") if c in df.columns
-            ]
-            if sort_cols:
-                out = df.repartitionByRange(
-                    self.partition_col, *sort_cols
-                ).sortWithinPartitions(self.partition_col, *sort_cols)
+        new_id = self._next_snapshot_id(tier)
         # stage with partitionBy, then move each partition dir into its
         # immutable v=<snap> home — touched partitions come from the
         # staging listing, no extra Spark job
         stage = os.path.join(self.location(tier), f"_stage-{new_id}")
         (
-            out.write.mode("overwrite")
+            df.write.mode("overwrite")
             .partitionBy(self.partition_col)
             .parquet(stage)
         )
@@ -529,8 +520,7 @@ class SnapshotBackend(TierBackend):
                     f"(nothing committed)")
             parts[value] = new_id
         fs.delete(jvm.org.apache.hadoop.fs.Path(stage), True)
-        committed = self._commit(tier, parts, parent)
-        assert committed == new_id
+        self._commit(tier, parts, parent, new_id)
 
     def _read_manifest(self, tier: str, manifest: dict) -> DataFrame:
         parts = manifest["parts"]
@@ -587,7 +577,7 @@ class SnapshotBackend(TierBackend):
                 f"{tier}: no partition {self.partition_col}={value!r} "
                 f"in snapshot {parent} (have {sorted(parts)})")
         parts.pop(value)
-        self._commit(tier, parts, parent)
+        self._commit(tier, parts, parent, self._next_snapshot_id(tier))
 
     def table_exists(self, tier: str) -> bool:
         return self.current_snapshot_id(tier) is not None
@@ -647,8 +637,7 @@ class SnapshotBackend(TierBackend):
         if cur is None:
             raise ValueError(f"{tier}: nothing committed")
         parts = dict(self._snapshot(tier, cur)["parts"])
-        snaps = self.snapshots(tier)
-        new_id = max(s["id"] for s in snaps) + 1
+        new_id = self._next_snapshot_id(tier)
         only = None if partitions is None else set(partitions)
         stats = {"partitions_compacted": 0,
                  "files_before": 0, "files_after": 0}
@@ -680,9 +669,8 @@ class SnapshotBackend(TierBackend):
             stats["files_before"] += n_files
             stats["files_after"] += after
         if stats["partitions_compacted"]:
-            committed = self._commit(tier, new_parts, cur)
-            assert committed == new_id
-            stats["snapshot_id"] = committed
+            self._commit(tier, new_parts, cur, new_id)
+            stats["snapshot_id"] = new_id
         else:
             stats["snapshot_id"] = None
         return stats
@@ -721,7 +709,6 @@ class IcebergBackend(TierBackend):
 
     def __init__(self, spark: SparkSession, namespace: str,
                  partition_col: str = "source",
-                 range_layout: bool = True,
                  extra_partition_buckets: int = 0):
         if not self.available(spark):
             raise RuntimeError(
@@ -731,7 +718,6 @@ class IcebergBackend(TierBackend):
         self.spark = spark
         self.namespace = namespace  # "catalog.db"
         self.partition_col = partition_col
-        self.range_layout = range_layout
         self.extra_partition_buckets = extra_partition_buckets
         spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {namespace}")
 
@@ -757,21 +743,10 @@ class IcebergBackend(TierBackend):
         return self._table(tier)
 
     # ------------------------------------------------------ TierBackend
-    def _sorted(self, df: DataFrame) -> DataFrame:
-        if not self.range_layout:
-            return df
-        sort_cols = [c for c in ("doc_id", "bin_start") if c in df.columns]
-        if not sort_cols:
-            return df
-        return df.repartitionByRange(
-            self.partition_col, *sort_cols
-        ).sortWithinPartitions(self.partition_col, *sort_cols)
-
     def write_partitions(self, df: DataFrame, tier: str) -> None:
         tbl = self._table(tier)
-        out = self._sorted(df)
         if not self.table_exists(tier):
-            w = out.writeTo(tbl).using("iceberg")
+            w = df.writeTo(tbl).using("iceberg")
             if self.extra_partition_buckets > 0:
                 w = w.partitionedBy(
                     F.col(self.partition_col),
@@ -784,7 +759,7 @@ class IcebergBackend(TierBackend):
             # dynamic partition overwrite as ONE snapshot commit:
             # replaces exactly the partitions present in df (the
             # write_partitions contract), atomically
-            out.writeTo(tbl).overwritePartitions()
+            df.writeTo(tbl).overwritePartitions()
 
     def merge_upsert(self, df: DataFrame, tier: str,
                      key_cols: Sequence[str]) -> None:
@@ -798,7 +773,7 @@ class IcebergBackend(TierBackend):
             self.write_partitions(df, tier)
             return
         view = f"_diive_merge_src_{tier}"
-        self._sorted(df).createOrReplaceTempView(view)
+        df.createOrReplaceTempView(view)
         on = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
         try:
             self.spark.sql(
@@ -917,12 +892,11 @@ class TierStore:
         self.root = root
         self.key_cols = list(key_cols)
         self.partition_col = partition_col
+        self.range_layout = range_layout
         # all tier-table I/O goes through the backend seam; the parquet
         # dynamic-partition-overwrite default is the sandbox stand-in
         # for an Iceberg catalog (see TierBackend for the mapping)
-        self.backend = backend or ParquetDPOBackend(
-            spark, root, partition_col, range_layout
-        )
+        self.backend = backend or ParquetDPOBackend(spark, root, partition_col)
         os.makedirs(root, exist_ok=True)
         self._lineage_path = os.path.join(root, "_lineage.jsonl")
         self._metrics_path = os.path.join(root, "_metrics.jsonl")
@@ -963,12 +937,12 @@ class TierStore:
             [{c: r.get(c) for c in cols} for r in rows]
         )
 
-    def _completed(self, tier: str) -> dict[str, str]:
-        """partition -> latest fingerprint recorded for *tier*."""
-        out: dict[str, str] = {}
+    def _completed(self) -> dict[str, dict[str, str]]:
+        """tier -> partition -> latest recorded fingerprint, from one
+        read of the lineage file."""
+        out: dict[str, dict[str, str]] = {}
         for rec in self.lineage():
-            if rec["tier"] == tier:
-                out[rec["partition"]] = rec["fingerprint"]
+            out.setdefault(rec["tier"], {})[rec["partition"]] = rec["fingerprint"]
         return out
 
     # ------------------------------------------------------- fingerprints
@@ -990,10 +964,57 @@ class TierStore:
     def path(self, tier: str) -> str:
         return self.backend.location(tier)
 
-    def _write_partitions(self, df: DataFrame, tier: str) -> None:
+    def _write_partitions(self, df: DataFrame, tier: str) -> tuple[int, list[str]]:
         """MERGE INTO analog: replace only the partitions present in
-        *df* (idempotent per partition) — delegated to the backend."""
-        self.backend.write_partitions(df, tier)
+        *df* (idempotent per partition) — the single tier-write path;
+        the backend only moves the bytes.
+
+        With ``range_layout`` the frame is range-partitioned and sorted
+        on (partition_col, doc_id, bin_start) so parquet row-group
+        min/max statistics are monotone: time-range and per-doc scans
+        prune at the row-group level (the north-rule's explicit range
+        partitioning).  Rows and touched partition values are counted
+        by one observation placed ABOVE that sort — the range exchange
+        runs its input twice (bound sampling, then the write), so a
+        count below it would read double.  Returns (n_rows, sorted
+        partition values written)."""
+        if self.range_layout:
+            sort_cols = [c for c in ("doc_id", "bin_start") if c in df.columns]
+            if sort_cols:
+                df = df.repartitionByRange(
+                    self.partition_col, *sort_cols
+                ).sortWithinPartitions(self.partition_col, *sort_cols)
+        obs = Observation()
+        self.backend.write_partitions(
+            df.observe(obs, F.count(F.lit(1)).alias("n_rows"),
+                       F.collect_set(self.partition_col).alias("parts")),
+            tier,
+        )
+        got = obs.get
+        return int(got["n_rows"]), sorted(got["parts"])
+
+    def _record(self, tier: str, op: str, fps: dict[str, str], n_rows: int,
+                t0: float, counts: dict, extra: dict | None = None) -> dict:
+        """Bookkeeping of one tier write started at monotonic *t0*: a
+        lineage row per partition in *fps* (partition -> fingerprint),
+        each carrying the write's total *n_rows*, and one metrics row.
+        Returns the metrics (*counts*, n_rows, wall_s, points_per_sec,
+        then *extra*)."""
+        wall = time.monotonic() - t0
+        ts = time.time()
+        for p, fp in fps.items():
+            self._append(self._lineage_path, {
+                "tier": tier, "partition": p, "fingerprint": fp,
+                "n_rows": n_rows, "wall_s": wall, "ts": ts,
+            })
+        metrics = {
+            **counts, "n_rows": n_rows, "wall_s": wall,
+            "points_per_sec": n_rows / wall if wall > 0 else 0.0,
+            **(extra or {}),
+        }
+        self._append(self._metrics_path,
+                     {"tier": tier, "op": op, "ts": ts, **metrics})
+        return metrics
 
     def read(self, tier: str) -> DataFrame:
         return self.backend.read(tier)
@@ -1030,9 +1051,19 @@ class TierStore:
         )
 
     # ------------------------------------------------------- raw (gorilla)
-    def _record_raw_write(self, parts: Sequence[str], n_rows: int) -> None:
-        """Lineage rows for a raw-tier write: retention (expire_raw's
-        before_ts selector) and the MERGE guards key off these."""
+    @staticmethod
+    def _encode_raw(tokens_df: DataFrame) -> DataFrame:
+        """Raw-tier rows: Gorilla-compressed token arrays + crc32."""
+        return tokens_df.select(
+            "doc_id", "n_tok",
+            gorilla_encode_values("tokens").alias("payload"), "source",
+        ).withColumn("checksum", F.crc32("payload"))
+
+    def _write_raw_tier(self, raw: DataFrame) -> None:
+        """Write raw-tier rows and their lineage rows: retention
+        (expire_raw's before_ts selector) and the MERGE guards key off
+        these."""
+        n_rows, parts = self._write_partitions(raw, "raw")
         ts = time.time()
         for p in parts:
             self._append(self._lineage_path, {
@@ -1043,18 +1074,7 @@ class TierStore:
     def write_raw(self, tokens_df: DataFrame) -> None:
         """Raw tier: Gorilla-compressed token arrays + crc32 checksum,
         partitioned like the aggregate tiers."""
-        raw = tokens_df.select(
-            "doc_id", "n_tok",
-            gorilla_encode_values("tokens").alias("payload"), "source",
-        ).withColumn("checksum", F.crc32("payload"))
-        obs = Observation()
-        self._write_partitions(
-            raw.observe(obs, F.count(F.lit(1)).alias("n_rows"),
-                        F.collect_set(self.partition_col).alias("parts")),
-            "raw",
-        )
-        got = obs.get
-        self._record_raw_write(sorted(got["parts"]), int(got["n_rows"]))
+        self._write_raw_tier(self._encode_raw(tokens_df))
 
     def read_raw_decoded(self) -> DataFrame:
         """Decode the raw tier back to (doc_id, tokens, n_tok, source)."""
@@ -1131,6 +1151,103 @@ class TierStore:
         })
         return stats
 
+    # ------------------------------------------------ resumable cascade
+    def _materialize(self, cascade: Sequence[TierSpec], first, fingerprint,
+                     frame, resume: bool, suffix: str = "",
+                     op: str = "materialize") -> dict[str, dict]:
+        """The incremental, resumable per-partition cascade behind every
+        ``materialize_*`` family; tier ``<spec.name><suffix>`` per spec.
+
+        *first(spec)* builds the first tier from the raw series and
+        returns ``(frame, extra)`` — *extra* are family keys added to
+        every metrics row.  That frame is persisted for the run and
+        *fingerprint*, a ``(count, hash)`` pair of aggregate columns,
+        gives each partition's input fingerprint from it.  A tier
+        recomputes the partitions whose fingerprint differs from its
+        lineage (all of them unless *resume*).  *frame(spec, src,
+        in_todo)* is what such a tier stores, where *src* is the first
+        tier's frame (first tier) or the stored tier below (upper
+        tiers), both filtered to the *in_todo* partition predicate."""
+        if cascade[0].from_tier is not None:
+            raise ValueError("cascade[0] must build from the raw series")
+        tier1, extra = first(cascade[0])
+        tier1 = tier1.persist()
+        fp_rows = (
+            tier1.groupBy(self.partition_col)
+            .agg(fingerprint[0].alias("n"), fingerprint[1].alias("h"))
+            .collect()
+        )
+        fps = {r[self.partition_col]: f"{r['n']}:{r['h']}" for r in fp_rows}
+        done = self._completed() if resume else {}
+        report: dict[str, dict] = {}
+        for spec in cascade:
+            name = spec.name + suffix
+            t0 = time.monotonic()
+            todo = [p for p, fp in fps.items()
+                    if done.get(name, {}).get(p) != fp]
+            counts = {"partitions_computed": len(todo),
+                      "partitions_skipped": len(fps) - len(todo)}
+            if not todo:
+                report[name] = {**counts, "n_rows": 0, "wall_s": 0.0,
+                                "points_per_sec": 0.0}
+                continue
+            in_todo = F.col(self.partition_col).isin(todo)
+            src = tier1 if spec.from_tier is None else self.read(
+                spec.from_tier + suffix)
+            n_rows, _ = self._write_partitions(
+                frame(spec, src.where(in_todo), in_todo), name)
+            report[name] = self._record(name, op, {p: fps[p] for p in todo},
+                                        n_rows, t0, counts, extra)
+        tier1.unpersist()
+        return report
+
+    def _tier_frame(self, spec: TierSpec, series: DataFrame,
+                    lower: DataFrame | None, hist_bins: int, axis_col: str,
+                    value_col: str,
+                    fingerprint_over: list[str] | None = None) -> DataFrame:
+        """The frame one rollup tier stores.  The first tier rolls the
+        raw *series* up (with bucket_rollup's ``_fp_h`` fingerprint
+        partials kept when *fingerprint_over* is given); an upper tier
+        composes *lower*, the tier below, and — percentiles don't
+        compose from partials — joins its exact percentiles rescanned
+        from *series* (one extra scan; approx sketches are the cheap
+        alternative at 100 TB, see DESIGN_SCALE.md).  Columns:
+        TIER_COLS + percentile columns + the COMPOSABLE_COLS present.
+
+        Tiers store UNGATED partials: gating a lower tier before
+        composing the next would diverge from diive's per-tier gate on
+        raw values.  The gate is applied at read time (read_gated), a
+        cheap filter over the small bin table."""
+        keys = self.key_cols
+        pcols = [percentile_col(q) for q in spec.percentiles]
+        if spec.from_tier is None:
+            out = bucket_rollup(
+                series, every=spec.every, axis_col=axis_col,
+                value_col=value_col, key_cols=keys,
+                mincounts_perc=0.0, min_floor_rule=False,
+                percentiles=list(spec.percentiles) or None,
+                fingerprint_over=fingerprint_over,
+                distinct_col=spec.distinct_col,
+                hist_bounds=spec.hist_bounds, hist_bins=spec.hist_bins,
+                ohlc=spec.ohlc,
+            )
+        else:
+            out = compose_rollup(
+                lower, every=spec.every, key_cols=keys,
+                mincounts_perc=0.0, min_floor_rule=False,
+                hist_bins=hist_bins if "hist" in lower.columns else None,
+            )
+            if spec.percentiles:
+                pct = bucket_rollup(
+                    series, every=spec.every, axis_col=axis_col,
+                    value_col=value_col, key_cols=keys,
+                    mincounts_perc=0.0, min_floor_rule=False,
+                    percentiles=list(spec.percentiles),
+                ).select(*keys, "bin_start", *pcols)
+                out = out.join(pct, on=keys + ["bin_start"], how="left")
+        return out.select(*TIER_COLS, *pcols, *[
+            c for c in (*COMPOSABLE_COLS, "_fp_h") if c in out.columns])
+
     # -------------------------------------------------- ddsketch cascade
     def materialize_ddsketch(
         self,
@@ -1164,79 +1281,29 @@ class TierStore:
         from .analyses import (collapse_ddsketch, compose_ddsketch,
                                ddsketch_agg, ddsketch_collapse_level)
 
-        report: dict[str, dict] = {}
-        first = cascade[0]
-        if first.from_tier is not None:
-            raise ValueError("cascade[0] must build from the raw series")
-        dd1 = ddsketch_agg(series_df, every=first.every, gamma=gamma,
-                           value_col=value_col, axis_col=axis_col,
-                           key_cols=self.key_cols)
-        level = 0
-        if max_buckets is not None:
-            level = ddsketch_collapse_level(dd1, max_buckets,
-                                            key_cols=self.key_cols)
-            dd1 = collapse_ddsketch(dd1, level, key_cols=self.key_cols)
-        dd1 = dd1.persist()
-        eff_gamma = float(gamma) ** (2 ** level)
-        fp_rows = (
-            dd1.groupBy(self.partition_col)
-            .agg(
-                F.sum("cnt").alias("n"),
-                F.bit_xor(F.xxhash64(*self.key_cols, "bin_start",
-                                     "sign", "bucket", "cnt")).alias("h"),
-            )
-            .collect()
-        )
-        fps = {r[self.partition_col]: f"{r['n']}:{r['h']}" for r in fp_rows}
-        for spec in cascade:
-            name = f"{spec.name}_dd"
-            t0 = time.monotonic()
-            done = self._completed(name) if resume else {}
-            todo = [p for p, fp in fps.items() if done.get(p) != fp]
-            skipped = [p for p in fps if p not in todo]
-            if not todo:
-                report[name] = {
-                    "partitions_computed": 0,
-                    "partitions_skipped": len(skipped),
-                    "n_rows": 0, "wall_s": 0.0, "points_per_sec": 0.0,
-                }
-                continue
-            if spec.from_tier is None:
-                out = dd1.where(F.col(self.partition_col).isin(todo))
-            else:
-                src = self.read(f"{spec.from_tier}_dd").where(
-                    F.col(self.partition_col).isin(todo)
-                )
-                out = compose_ddsketch(src, every=spec.every,
+        cols = [*self.key_cols, "bin_start", "sign", "bucket", "cnt"]
+
+        def first(spec):
+            dd1 = ddsketch_agg(series_df, every=spec.every, gamma=gamma,
+                               value_col=value_col, axis_col=axis_col,
+                               key_cols=self.key_cols)
+            level = 0
+            if max_buckets is not None:
+                level = ddsketch_collapse_level(dd1, max_buckets,
+                                                key_cols=self.key_cols)
+                dd1 = collapse_ddsketch(dd1, level, key_cols=self.key_cols)
+            return dd1, {"gamma": float(gamma) ** (2 ** level),
+                         "collapse_level": level}
+
+        def frame(spec, src, in_todo):
+            if spec.from_tier is not None:
+                src = compose_ddsketch(src, every=spec.every,
                                        key_cols=self.key_cols)
-            obs = Observation()
-            self._write_partitions(
-                out.select(*self.key_cols, "bin_start", "sign", "bucket",
-                           "cnt")
-                .observe(obs, F.count(F.lit(1)).alias("n_rows")),
-                name,
-            )
-            n_rows = int(obs.get["n_rows"])
-            wall = time.monotonic() - t0
-            ts = time.time()
-            for p in todo:
-                self._append(self._lineage_path, {
-                    "tier": name, "partition": p, "fingerprint": fps[p],
-                    "n_rows": n_rows, "wall_s": wall, "ts": ts,
-                })
-            metrics = {
-                "partitions_computed": len(todo),
-                "partitions_skipped": len(skipped),
-                "n_rows": n_rows, "wall_s": wall,
-                "points_per_sec": n_rows / wall if wall > 0 else 0.0,
-                "gamma": eff_gamma, "collapse_level": level,
-            }
-            self._append(self._metrics_path,
-                         {"tier": name, "op": "materialize_dd", "ts": ts,
-                          **metrics})
-            report[name] = metrics
-        dd1.unpersist()
-        return report
+            return src.select(*cols)
+
+        return self._materialize(
+            cascade, first, (F.sum("cnt"), F.bit_xor(F.xxhash64(*cols))),
+            frame, resume, suffix="_dd", op="materialize_dd")
 
     def read_dd_quantiles(self, tier: str, qs: Sequence[float],
                           gamma: float = 1.02) -> DataFrame:
@@ -1275,73 +1342,24 @@ class TierStore:
         every tier.  Probe the stores with :meth:`read_cm_estimate`."""
         from .analyses import cm_sketch_agg, compose_cm
 
-        report: dict[str, dict] = {}
-        first = cascade[0]
-        if first.from_tier is not None:
-            raise ValueError("cascade[0] must build from the raw series")
-        cm1 = cm_sketch_agg(series_df, every=first.every, depth=depth,
-                            width=width, value_col=value_col,
-                            axis_col=axis_col, key_cols=self.key_cols)
-        cm1 = cm1.persist()
-        fp_rows = (
-            cm1.groupBy(self.partition_col)
-            .agg(
-                F.sum("cnt").alias("n"),
-                F.bit_xor(F.xxhash64(*self.key_cols, "bin_start",
-                                     "row", "col", "cnt")).alias("h"),
-            )
-            .collect()
-        )
-        fps = {r[self.partition_col]: f"{r['n']}:{r['h']}" for r in fp_rows}
-        for spec in cascade:
-            name = f"{spec.name}_cm"
-            t0 = time.monotonic()
-            done = self._completed(name) if resume else {}
-            todo = [p for p, fp in fps.items() if done.get(p) != fp]
-            skipped = [p for p in fps if p not in todo]
-            if not todo:
-                report[name] = {
-                    "partitions_computed": 0,
-                    "partitions_skipped": len(skipped),
-                    "n_rows": 0, "wall_s": 0.0, "points_per_sec": 0.0,
-                }
-                continue
-            if spec.from_tier is None:
-                out = cm1.where(F.col(self.partition_col).isin(todo))
-            else:
-                src = self.read(f"{spec.from_tier}_cm").where(
-                    F.col(self.partition_col).isin(todo)
-                )
-                out = compose_cm(src, every=spec.every,
+        cols = [*self.key_cols, "bin_start", "row", "col", "cnt"]
+
+        def first(spec):
+            return cm_sketch_agg(
+                series_df, every=spec.every, depth=depth, width=width,
+                value_col=value_col, axis_col=axis_col,
+                key_cols=self.key_cols,
+            ), {"depth": int(depth), "width": int(width)}
+
+        def frame(spec, src, in_todo):
+            if spec.from_tier is not None:
+                src = compose_cm(src, every=spec.every,
                                  key_cols=self.key_cols)
-            obs = Observation()
-            self._write_partitions(
-                out.select(*self.key_cols, "bin_start", "row", "col",
-                           "cnt")
-                .observe(obs, F.count(F.lit(1)).alias("n_rows")),
-                name,
-            )
-            n_rows = int(obs.get["n_rows"])
-            wall = time.monotonic() - t0
-            ts = time.time()
-            for p in todo:
-                self._append(self._lineage_path, {
-                    "tier": name, "partition": p, "fingerprint": fps[p],
-                    "n_rows": n_rows, "wall_s": wall, "ts": ts,
-                })
-            metrics = {
-                "partitions_computed": len(todo),
-                "partitions_skipped": len(skipped),
-                "n_rows": n_rows, "wall_s": wall,
-                "points_per_sec": n_rows / wall if wall > 0 else 0.0,
-                "depth": int(depth), "width": int(width),
-            }
-            self._append(self._metrics_path,
-                         {"tier": name, "op": "materialize_cm", "ts": ts,
-                          **metrics})
-            report[name] = metrics
-        cm1.unpersist()
-        return report
+            return src.select(*cols)
+
+        return self._materialize(
+            cascade, first, (F.sum("cnt"), F.bit_xor(F.xxhash64(*cols))),
+            frame, resume, suffix="_cm", op="materialize_cm")
 
     def read_cm_estimate(self, tier: str, probes: DataFrame,
                          depth: int = 4, width: int = 128,
@@ -1366,109 +1384,27 @@ class TierStore:
         """Materialize all tiers incrementally.  Returns per-tier metrics
         {tier: {partitions_computed, partitions_skipped, n_rows, wall_s,
         points_per_sec}}."""
-        report: dict[str, dict] = {}
-        first = cascade[0]
-        if first.from_tier is not None:
-            raise ValueError("cascade[0] must build from the raw series")
+        hist_bins = cascade[0].hist_bins
+
         # ONE pass over the raw series: the first tier's aggregation also
         # carries per-bin fingerprint partials (bit_xor composes upward),
         # so change detection needs no dedicated fingerprint scan
         # (VERDICT r1 item 7).  Unchanged partitions cost a discarded
         # aggregate, not an extra corpus read.
-        agg1 = bucket_rollup(
-            series_df, every=first.every, axis_col=axis_col,
-            value_col=value_col, key_cols=self.key_cols,
-            mincounts_perc=0.0, min_floor_rule=False,
-            percentiles=list(first.percentiles) or None,
-            fingerprint_over=self.key_cols + [axis_col],
-            distinct_col=first.distinct_col,
-            hist_bounds=first.hist_bounds, hist_bins=first.hist_bins,
-            ohlc=first.ohlc,
-        ).persist()
-        fp_rows = (
-            agg1.groupBy(self.partition_col)
-            .agg(F.sum("n_grid").alias("n"), F.bit_xor("_fp_h").alias("h"))
-            .collect()
-        )
-        fps = {r[self.partition_col]: f"{r['n']}:{r['h']}" for r in fp_rows}
-        for spec in cascade:
-            t0 = time.monotonic()
-            done = self._completed(spec.name) if resume else {}
-            todo = [p for p, fp in fps.items() if done.get(p) != fp]
-            skipped = [p for p in fps if p not in todo]
-            if not todo:
-                report[spec.name] = {
-                    "partitions_computed": 0,
-                    "partitions_skipped": len(skipped),
-                    "n_rows": 0, "wall_s": 0.0, "points_per_sec": 0.0,
-                }
-                continue
-            # Tiers store UNGATED partials: gating a lower tier before
-            # composing the next would diverge from diive's per-tier gate
-            # on raw values.  The gate is applied at read time
-            # (read_gated), a cheap filter over the small bin table.
+        def first(spec):
+            return self._tier_frame(
+                spec, series_df, None, hist_bins, axis_col, value_col,
+                fingerprint_over=self.key_cols + [axis_col]), {}
+
+        def frame(spec, src, in_todo):
             if spec.from_tier is None:
-                out = agg1.where(F.col(self.partition_col).isin(todo)).drop("_fp_h")
-            else:
-                src = self.read(spec.from_tier).where(
-                    F.col(self.partition_col).isin(todo)
-                )
-                out = compose_rollup(
-                    src, every=spec.every, key_cols=self.key_cols,
-                    mincounts_perc=0.0, min_floor_rule=False,
-                    hist_bins=cascade[0].hist_bins
-                    if "hist" in src.columns else None,
-                )
-                if spec.percentiles:
-                    # percentiles don't compose from partials — recompute
-                    # exactly from the raw series for this tier's bins
-                    # (one extra scan; approx sketches are the cheap
-                    # alternative at 100 TB, see DESIGN_SCALE.md)
-                    raw = series_df.where(F.col(self.partition_col).isin(todo))
-                    pct = bucket_rollup(
-                        raw, every=spec.every, axis_col=axis_col,
-                        value_col=value_col, key_cols=self.key_cols,
-                        mincounts_perc=0.0, min_floor_rule=False,
-                        percentiles=list(spec.percentiles),
-                    ).select(
-                        *self.key_cols, "bin_start",
-                        *[f"p{int(round(q * 100)):02d}" for q in spec.percentiles],
-                    )
-                    out = out.join(pct, on=self.key_cols + ["bin_start"], how="left")
-            cols = TIER_COLS + [
-                f"p{int(round(q * 100)):02d}" for q in spec.percentiles
-            ]
-            for sketch in COMPOSABLE_COLS:
-                if sketch in out.columns:
-                    cols = cols + [sketch]
-            # n_rows from the write itself (CollectMetrics observation),
-            # not a re-read count (VERDICT r1 item 7)
-            obs = Observation()
-            self._write_partitions(
-                out.select(*cols).observe(obs, F.count(F.lit(1)).alias("n_rows")),
-                spec.name,
-            )
-            n_rows = int(obs.get["n_rows"])
-            wall = time.monotonic() - t0
-            ts = time.time()
-            for p in todo:
-                self._append(self._lineage_path, {
-                    "tier": spec.name, "partition": p, "fingerprint": fps[p],
-                    "n_rows": n_rows, "wall_s": wall, "ts": ts,
-                })
-            metrics = {
-                "partitions_computed": len(todo),
-                "partitions_skipped": len(skipped),
-                "n_rows": n_rows,
-                "wall_s": wall,
-                "points_per_sec": n_rows / wall if wall > 0 else 0.0,
-            }
-            self._append(self._metrics_path,
-                         {"tier": spec.name, "op": "materialize", "ts": ts,
-                          **metrics})
-            report[spec.name] = metrics
-        agg1.unpersist()
-        return report
+                return src.drop("_fp_h")
+            return self._tier_frame(spec, series_df.where(in_todo), src,
+                                    hist_bins, axis_col, value_col)
+
+        return self._materialize(
+            cascade, first, (F.sum("n_grid"), F.bit_xor("_fp_h")), frame,
+            resume)
 
     # ------------------------------------------------------ incremental
     def ingest_increment(
@@ -1509,11 +1445,7 @@ class TierStore:
         affected = [r[self.partition_col]
                     for r in inc_keys.select(self.partition_col).distinct().collect()]
         inc_series = series_view(inc)
-
-        inc_raw = inc.select(
-            "doc_id", "n_tok",
-            gorilla_encode_values("tokens").alias("payload"), "source",
-        ).withColumn("checksum", F.crc32("payload"))
+        inc_raw = self._encode_raw(inc)
 
         # fingerprint deltas: xor removes replaced docs, adds the batch.
         # A fresh store bootstraps with an empty raw side; raw presence
@@ -1523,7 +1455,9 @@ class TierStore:
         # partition (raw payloads gone — replaced docs' fingerprints
         # can no longer be subtracted) and an orphaned partition with
         # materialized tier lineage but no raw tier behind it.
-        raw_state = self._completed("raw")
+        done = self._completed()
+        raw_state = done.get("raw", {})
+        old_fps = done.get(first.name, {})
         expired = [p for p in affected if raw_state.get(p) == "EXPIRED"]
         if expired:
             raise ValueError(
@@ -1531,9 +1465,8 @@ class TierStore:
                 "MERGE needs their raw payloads to subtract replaced "
                 "docs — write_raw the full partition again first"
             )
-        tier1_done = self._completed(cascade[0].name)
         orphaned = [p for p in affected
-                    if p in tier1_done and p not in raw_state]
+                    if p in old_fps and p not in raw_state]
         if orphaned:
             raise ValueError(
                 f"partitions {orphaned} have materialized lineage but "
@@ -1555,7 +1488,6 @@ class TierStore:
         )
         inc_fps = self._fingerprints(inc_series, axis_col)
         rm_fps = self._fingerprints(series_view(replaced_tokens), axis_col)
-        old_fps = self._completed(cascade[0].name)
         mask = (1 << 64) - 1
 
         def _combine(part: str) -> str:
@@ -1580,92 +1512,34 @@ class TierStore:
         # gets this for free via snapshot isolation, this is the sandbox
         # equivalent (bounded: only the affected partitions are staged).
         kept_raw = old_raw.join(inc_keys, on=keys, how="left_anti")
-        raw_obs = Observation()
-        self._write_partitions(
-            kept_raw.select(*inc_raw.columns)
-            .unionByName(inc_raw)
+        self._write_raw_tier(
+            kept_raw.select(*inc_raw.columns).unionByName(inc_raw)
             .localCheckpoint()
-            .observe(raw_obs, F.count(F.lit(1)).alias("n_rows")),
-            "raw",
         )
-        self._record_raw_write(affected, int(raw_obs.get["n_rows"]))
 
         report: dict[str, dict] = {}
         inc_tiers: dict[str, DataFrame] = {}
         for spec in cascade:
             t0 = time.monotonic()
-            if spec.from_tier is None:
-                out = bucket_rollup(
-                    inc_series, every=spec.every, axis_col=axis_col,
-                    value_col=value_col, key_cols=keys,
-                    mincounts_perc=0.0, min_floor_rule=False,
-                    percentiles=list(spec.percentiles) or None,
-                    distinct_col=spec.distinct_col,
-                    hist_bounds=spec.hist_bounds, hist_bins=spec.hist_bins,
-                    ohlc=spec.ohlc,
-                )
-            else:
-                src = inc_tiers[spec.from_tier]
-                out = compose_rollup(
-                    src, every=spec.every,
-                    key_cols=keys, mincounts_perc=0.0, min_floor_rule=False,
-                    hist_bins=cascade[0].hist_bins
-                    if "hist" in src.columns else None,
-                )
-                if spec.percentiles:
-                    pct = bucket_rollup(
-                        inc_series, every=spec.every, axis_col=axis_col,
-                        value_col=value_col, key_cols=keys,
-                        mincounts_perc=0.0, min_floor_rule=False,
-                        percentiles=list(spec.percentiles),
-                    ).select(
-                        *keys, "bin_start",
-                        *[f"p{int(round(q * 100)):02d}" for q in spec.percentiles],
-                    )
-                    out = out.join(pct, on=keys + ["bin_start"], how="left")
-            cols = TIER_COLS + [
-                f"p{int(round(q * 100)):02d}" for q in spec.percentiles
-            ]
-            for sketch in COMPOSABLE_COLS:
-                if sketch in out.columns:
-                    cols = cols + [sketch]
-            out = out.select(*cols).localCheckpoint()
+            out = self._tier_frame(
+                spec, inc_series, inc_tiers.get(spec.from_tier),
+                first.hist_bins, axis_col, value_col,
+            ).localCheckpoint()
             inc_tiers[spec.name] = out
-
+            merged = out
             if self.backend.table_exists(spec.name):
                 stored = self.read(spec.name).where(
                     F.col(self.partition_col).isin(affected)
                 )
                 # staged via localCheckpoint: same read-then-overwrite
                 # constraint as the raw merge above
-                merged = stored.select(*cols).join(
+                merged = stored.select(*out.columns).join(
                     inc_keys, on=keys, how="left_anti"
                 ).unionByName(out).localCheckpoint()
-            else:
-                merged = out
-            obs = Observation()
-            self._write_partitions(
-                merged.observe(obs, F.count(F.lit(1)).alias("n_rows")), spec.name
-            )
-            n_rows = int(obs.get["n_rows"])
-            wall = time.monotonic() - t0
-            ts = time.time()
-            for p in affected:
-                self._append(self._lineage_path, {
-                    "tier": spec.name, "partition": p,
-                    "fingerprint": new_fps[p],
-                    "n_rows": n_rows, "wall_s": wall, "ts": ts,
-                })
-            metrics = {
-                "partitions_merged": len(affected),
-                "n_rows": n_rows,
-                "wall_s": wall,
-                "points_per_sec": n_rows / wall if wall > 0 else 0.0,
-            }
-            self._append(self._metrics_path,
-                         {"tier": spec.name, "op": "merge", "ts": ts,
-                          **metrics})
-            report[spec.name] = metrics
+            n_rows, _ = self._write_partitions(merged, spec.name)
+            report[spec.name] = self._record(
+                spec.name, "merge", new_fps, n_rows, t0,
+                {"partitions_merged": len(affected)})
         inc.unpersist()
         inc_keys.unpersist()
         return report

@@ -3417,9 +3417,10 @@ def q_tier_compact(spark, sf_dir):
     )
     root = tempfile.mkdtemp(prefix="tiers_cmp_")
     try:
-        # range_layout=False keeps the repartition(8) fan-out, so the
-        # write really produces multiple files per partition dir
-        be = ParquetDPOBackend(spark, root, range_layout=False)
+        # backends write the frame as given (the range layout is the
+        # TierStore's), so the repartition(8) fan-out really produces
+        # multiple files per partition dir
+        be = ParquetDPOBackend(spark, root)
         st = TierStore(spark, root, backend=be)
         be.write_partitions(toks.repartition(8), "raw")
         before = st.read("raw").localCheckpoint()

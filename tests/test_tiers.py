@@ -3,8 +3,11 @@ and resume-from-lineage (kill/restart analog)."""
 
 from __future__ import annotations
 
+from functools import reduce
+
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import DataFrame
 
 from diive_spark.operators.resample import bucket_rollup
 from diive_spark.operators.tiers import DEFAULT_CASCADE, TierStore, salted_source_agg
@@ -15,6 +18,37 @@ from .conftest import assert_frame_close
 @pytest.fixture()
 def store(spark, tmp_path):
     return TierStore(spark, str(tmp_path / "tiers"))
+
+
+def _assert_n_rows_are_stored_rows(store, report, op):
+    """The last write to every tier in *report*, and to raw when the
+    store has one, reports the rows it stored — in the report, in each
+    of its lineage rows and in its metrics row (*op*) — counted over the
+    partitions it wrote."""
+    lineage, metrics = store.lineage(), store.metrics()
+    has_raw = any(r["tier"] == "raw" for r in lineage)
+    last = {}
+    for tier in ["raw", *report] if has_raw else report:
+        ts = max(r["ts"] for r in lineage if r["tier"] == tier)
+        last[tier] = [r for r in lineage
+                      if r["tier"] == tier and r["ts"] == ts]
+    # every tier's stored rows in the partitions its last write touched,
+    # counted in one Spark aggregation
+    counts = dict(reduce(DataFrame.unionByName, [
+        store.read(tier)
+        .where(F.col("source").isin([r["partition"] for r in rows]))
+        .select(F.lit(tier).alias("tier"))
+        for tier, rows in last.items()
+    ]).groupBy("tier").count().collect())
+    for tier, rows in last.items():
+        stored = counts.get(tier, 0)
+        assert stored > 0, tier
+        assert {r["n_rows"] for r in rows} == {stored}, tier
+        if tier == "raw":
+            continue
+        assert report[tier]["n_rows"] == stored, tier
+        row = [m for m in metrics if m["tier"] == tier and m["op"] == op][-1]
+        assert row["n_rows"] == stored, tier
 
 
 def test_cascade_and_resume(spark, store, tiny_tokens, tiny_series):
@@ -271,9 +305,11 @@ def test_ingest_increment_equals_full_materialize(spark, tmp_path):
 
     inc_store = TierStore(spark, str(tmp_path / "inc"))
     inc_store.write_raw(b1)
-    inc_store.materialize_cascade(series_view(b1))
+    rep0 = inc_store.materialize_cascade(series_view(b1))
+    _assert_n_rows_are_stored_rows(inc_store, rep0, "materialize")
     rep = inc_store.ingest_increment(b2)
     assert rep["tier_1m"]["n_rows"] > 0
+    _assert_n_rows_are_stored_rows(inc_store, rep, "merge")
 
     merged = b1.join(b2.select("source", "doc_id"),
                      on=["source", "doc_id"], how="left_anti").unionByName(b2)
@@ -369,9 +405,12 @@ def test_expire_raw_retention(spark, tmp_path, tiny_tokens):
 
 def test_lineage_and_metrics_tables(spark, tmp_path, tiny_tokens):
     """lineage_df / metrics_df expose the store's bookkeeping as
-    queryable tables (north rule: per-partition lineage + metrics)."""
+    queryable tables (north rule: per-partition lineage + metrics), and
+    every n_rows they and the report carry is the number of rows
+    stored."""
     store = TierStore(spark, str(tmp_path / "lm"))
-    store.ingest_increment(tiny_tokens)
+    rep = store.ingest_increment(tiny_tokens)
+    _assert_n_rows_are_stored_rows(store, rep, "merge")
     store.expire_raw(sources=store.partitions("raw")[:1])
 
     ldf = store.lineage_df()
@@ -643,6 +682,7 @@ def test_ddsketch_cascade_compose_resume_and_quantiles(spark, store,
 
     rep1 = store.materialize_ddsketch(tiny_series)
     assert all(m["partitions_computed"] > 0 for m in rep1.values())
+    _assert_n_rows_are_stored_rows(store, rep1, "materialize_dd")
     key = ["source", "doc_id", "bin_start", "sign", "bucket"]
     cols = key + ["cnt"]
     got = store.read("tier_1d_dd").select(*cols).orderBy(*key).toPandas()
@@ -870,18 +910,15 @@ def _compact_backend(spark, kind, tmp_path):
         IcebergBackend, ParquetDPOBackend, SnapshotBackend)
 
     if kind == "dpo":
-        return ParquetDPOBackend(spark, str(tmp_path / "be"),
-                                 range_layout=False)
+        return ParquetDPOBackend(spark, str(tmp_path / "be"))
     if kind == "snapshot":
-        return SnapshotBackend(spark, str(tmp_path / "be"),
-                               range_layout=False)
+        return SnapshotBackend(spark, str(tmp_path / "be"))
     if not IcebergBackend.available(spark):
         pytest.skip(
             "iceberg-spark-runtime jars absent in this sandbox; the "
             "dpo/snapshot legs cover the same contract (compact maps "
             "to CALL system.rewrite_data_files, see IcebergBackend)")
-    return IcebergBackend(spark, "local.tiertest_compact",
-                          range_layout=False)
+    return IcebergBackend(spark, "local.tiertest_compact")
 
 
 @pytest.mark.parametrize("kind", ["dpo", "snapshot", "iceberg"])
@@ -927,7 +964,7 @@ def test_snapshot_compact_is_a_snapshot_commit(spark, tmp_path):
     and expiry then reclaims the uncompacted versions."""
     from diive_spark.operators.tiers import SnapshotBackend
 
-    be = SnapshotBackend(spark, str(tmp_path / "be"), range_layout=False)
+    be = SnapshotBackend(spark, str(tmp_path / "be"))
     be.write_partitions(_many_file_frame(spark), "t")
     s1 = be.current_snapshot_id("t")
     before = sorted(
@@ -958,8 +995,7 @@ def test_tier_store_compact_records_metrics(spark, tmp_path):
 
     root = str(tmp_path / "store")
     st = TierStore(spark, root,
-                   backend=ParquetDPOBackend(spark, root,
-                                             range_layout=False))
+                   backend=ParquetDPOBackend(spark, root))
     df = _many_file_frame(spark).withColumnRenamed("v", "n_tok")
     st.backend.write_partitions(df, "raw")
     before = sorted((r.source, r.doc_id) for r in st.read("raw").collect())
@@ -985,6 +1021,7 @@ def test_cm_cascade_compose_resume_and_probe(spark, store, tiny_series):
 
     rep1 = store.materialize_cm(tiny_series, depth=3, width=32)
     assert all(m["partitions_computed"] > 0 for m in rep1.values())
+    _assert_n_rows_are_stored_rows(store, rep1, "materialize_cm")
     key = ["source", "doc_id", "bin_start", "row", "col"]
     cols = key + ["cnt"]
     got = store.read("tier_1d_cm").select(*cols).orderBy(*key).toPandas()
